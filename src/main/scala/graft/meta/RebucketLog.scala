@@ -238,9 +238,11 @@ object RebucketLog {
   /** The set carries ONE mapping and it is the CURRENT count's — the
     * precondition for every id-derived optimization (single-bucket point
     * prune, reported KeyGroupedPartitioning / storage-partitioned joins,
-    * bucket-paired diffs and joins). */
+    * bucket-paired diffs and joins). Ids at or above the count never
+    * belong to the current mapping. */
   def settledAt(props: Map[String, String], current: Int,
       files: Seq[ResolvedFile]): Boolean =
     epochsOf(props, current, files)
-      .exists(es => es.size <= 1 && es.forall(_._1 == current))
+      .exists(es => es.size <= 1 && es.forall(_._1 == current)) &&
+      files.forall(_.file.bucketId < current)
 }

@@ -404,11 +404,29 @@ class GraftScan(
     with SupportsReportOrdering
     with SupportsReportStatistics with SupportsRuntimeFiltering {
 
+  /** The ID-DERIVED optimizations — the single-bucket point prune (M6)
+    * and the reported KeyGroupedPartitioning (SPJ) — are valid only when
+    * the files' single mapping IS the CURRENT count's: mid re-bucket,
+    * mid crashed-restore recovery, or reading a time-travel/incremental
+    * boundary that predates a completed re-bucket, files carry a
+    * DIFFERENT mapping — pruning by the current count would miss the
+    * key's actual bucket, and SPJ would pair partitions of two different
+    * mappings (silently wrong join). Merge correctness is
+    * mapping-agnostic and stays on. */
+  private val mappingSettled =
+    graft.meta.RebucketLog.settledAt(info.properties, info.bucketNum, filesIn)
+
+  private val pkBucketEff: Option[Int] = if (mappingSettled) pkBucket else None
+
   // metadata-level file skipping (zone maps): drop files whose min/max
-  // bounds prove no row matches; merge-safety enforced inside prune
-  private var files: Seq[ResolvedFile] =
+  // bounds prove no row matches (merge-safety enforced inside prune), and
+  // on a full-PK equality every file outside the key's bucket
+  private var files: Seq[ResolvedFile] = {
+    val inBucket = pkBucketEff.fold(filesIn)(b =>
+      filesIn.filter(f => f.file.bucketId == b || f.file.bucketId < 0))
     StatsSkipping.prune(info, graft.util.SchemaUtil.fromJson(info.schemaJson),
-      filesIn, dataFilters)
+      inBucket, dataFilters, snapshot = Some(filesIn))
+  }
 
   // ---- SupportsRuntimeFiltering (dynamic file pruning): after a join's
   // build side materializes, Spark re-filters this scan with
@@ -427,9 +445,11 @@ class GraftScan(
     schema.fieldNames.map(graft.util.SchemaUtil.qref)
 
   override def filter(runtimeFilters: Array[Filter]): Unit = {
+    // merge groups are classified from the unpruned snapshot: `files` may
+    // already have lost a group's runs to the key prune above
     files = StatsSkipping.prune(info,
       graft.util.SchemaUtil.fromJson(info.schemaJson), files,
-      runtimeFilters.toSeq)
+      runtimeFilters.toSeq, snapshot = Some(filesIn))
     plannedCache = null // partition plan derives from `files` — recompute
   }
 
@@ -466,21 +486,6 @@ class GraftScan(
 
   private val crossBucketNeeded: Boolean =
     info.hasPrimaryKey && !epochsOpt.exists(_.size <= 1)
-
-  /** The ID-DERIVED optimizations — the single-bucket point prune (M6)
-    * and the reported KeyGroupedPartitioning (SPJ) — are valid only when
-    * the files' single mapping IS the CURRENT count's: mid re-bucket,
-    * mid crashed-restore recovery, or reading a time-travel/incremental
-    * boundary that predates a completed re-bucket, files carry a
-    * DIFFERENT mapping — pruning by the current count would miss the
-    * key's actual bucket, and SPJ would pair partitions of two different
-    * mappings (silently wrong join). Merge correctness is
-    * mapping-agnostic and stays on. */
-  private val mappingSettled =
-    graft.meta.RebucketLog.settledAt(info.properties, info.bucketNum, filesIn) &&
-      filesIn.forall(_.file.bucketId < info.bucketNum)
-
-  private val pkBucketEff: Option[Int] = if (mappingSettled) pkBucket else None
 
   private val multiRun =
     files.groupBy(_.partitionDesc).values.exists(_.map(_.commitOrdinal).distinct.size > 1)

@@ -15,64 +15,86 @@ import graft.write.StatsCompare
   * schema-evolved column) always keeps the file. Spark re-applies every
   * filter above the scan, so skipping is purely an optimization and can
   * never change results — PROVIDED the filters are merge-safe, which
-  * [[prune]] enforces with the same rule the reader-level pushdown uses
-  * (key-only filters once a partition has multiple sorted runs: a merged
-  * row's key equals its key in every contributing file, so a key-range
-  * exclusion is exact; a VALUE column's merged result could differ from a
-  * dropped file's contribution, so value filters only skip on single-run /
-  * non-PK data).
+  * [[prune]] decides per merge group, the unit the merge itself works in:
+  * key filters may skip any file (a merged row's key equals its key in
+  * every contributing file, so a key-range exclusion is exact); VALUE
+  * filters may skip only files of a single-run group (a multi-run group's
+  * merged value could differ from a dropped file's contribution — dropping
+  * the newer version would resurface the older one).
   */
 object StatsSkipping {
 
-  /** Drop files that provably contain no matching row. */
+  /** Drop files that provably contain no matching row.
+    *
+    * Merge safety is decided per merge group of a PK table — (range
+    * partition, bucket) when `snapshot` carries one key->bucket mapping,
+    * the whole range partition when it spans a re-bucket flip or is
+    * mapping-ambiguous (a key's versions may then sit in two buckets).
+    * Groups are classified from `snapshot`, the unpruned file set the
+    * read resolved: a caller re-pruning an already-pruned set (runtime
+    * filtering) must pass the original so a group that lost runs to an
+    * earlier prune still counts as multi-run. */
   def prune(
       info: TableInfo,
       schema: StructType,
       files: Seq[ResolvedFile],
-      filters: Seq[Filter]): Seq[ResolvedFile] = {
-    if (filters.isEmpty || files.isEmpty) return files
-    val multiRun = info.hasPrimaryKey &&
-      files.groupBy(_.partitionDesc).values.exists(_.map(_.commitOrdinal).distinct.size > 1)
-    val keyCols = (info.rangeColumns ++ info.hashColumns).toSet
-    val safe =
-      if (!multiRun) filters
-      else filters.filter(_.references.forall(keyCols.contains))
-    if (safe.isEmpty) return files
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    files.filter { f =>
-      val st = FileStats.decode(f.file.stats)
-      st.isEmpty || safe.forall(mightMatch(_, st, types))
-    }
-  }
+      filters: Seq[Filter],
+      snapshot: Option[Seq[ResolvedFile]] = None): Seq[ResolvedFile] =
+    if (filters.isEmpty || files.isEmpty) files
+    else files.filter(fileMightMatch(info, schema, filters, snapshot.getOrElse(files)))
 
   /** Rewrite-granularity pruning for the tiered UPDATE/DELETE path: a
     * rewrite must replace ALL runs of a (partition, bucket) together (a
     * partial-run rewrite would reorder commit ordinals and corrupt the
     * merge), so skipping here drops whole GROUPS — a (partition, bucket)
     * of a PK table, a single file of a non-PK table — and only when no
-    * file in the group might match. Per-group merge-safety: value filters
-    * may prune a single-run group, key filters any group. */
+    * file in the group might match, under [[prune]]'s merge-safety rule. */
   def pruneGroups(
       info: TableInfo,
       schema: StructType,
       files: Seq[ResolvedFile],
       filters: Seq[Filter]): Seq[ResolvedFile] = {
     if (filters.isEmpty || files.isEmpty) return files
-    val keyCols = (info.rangeColumns ++ info.hashColumns).toSet
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val keep = fileMightMatch(info, schema, filters, files)
     files.groupBy(f =>
       if (info.hasPrimaryKey) (f.partitionDesc, f.file.bucketId.toString)
       else (f.partitionDesc, f.file.path))
-      .values.filter { group =>
-        val multiRun = group.map(_.commitOrdinal).distinct.size > 1
-        val safe =
-          if (!multiRun) filters
-          else filters.filter(_.references.forall(keyCols.contains))
-        safe.isEmpty || group.exists { f =>
-          val st = FileStats.decode(f.file.stats)
-          st.isEmpty || safe.forall(mightMatch(_, st, types))
-        }
-      }.flatten.toSeq
+      .values.filter(_.exists(keep)).flatten.toSeq
+  }
+
+  /** Whether a file's stats leave a row that might satisfy every
+    * merge-safe filter: all `filters` for files of single-run groups of
+    * `snapshot` (and of non-PK tables), only the key filters otherwise. */
+  private def fileMightMatch(info: TableInfo, schema: StructType,
+      filters: Seq[Filter], snapshot: Seq[ResolvedFile]): ResolvedFile => Boolean = {
+    val keyCols = (info.rangeColumns ++ info.hashColumns).toSet
+    val keyFilters = filters.filter(_.references.forall(keyCols.contains))
+    val multiRun: ResolvedFile => Boolean =
+      if (!info.hasPrimaryKey) _ => false
+      else multiRunGroups(info, snapshot)
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    f => {
+      val safe = if (multiRun(f)) keyFilters else filters
+      safe.isEmpty || {
+        val st = FileStats.decode(f.file.stats)
+        st.isEmpty || safe.forall(mightMatch(_, st, types))
+      }
+    }
+  }
+
+  /** Membership test for the multi-run merge groups of `snapshot` (see
+    * [[prune]] for the grouping). */
+  private def multiRunGroups(info: TableInfo,
+      snapshot: Seq[ResolvedFile]): ResolvedFile => Boolean = {
+    val oneMapping = graft.meta.RebucketLog
+      .epochsOf(info.properties, info.bucketNum, snapshot).exists(_.size <= 1)
+    val groupOf: ResolvedFile => (String, Int) =
+      if (oneMapping) f => (f.partitionDesc, f.file.bucketId)
+      else f => (f.partitionDesc, 0)
+    val multi = snapshot.groupBy(groupOf).iterator.collect {
+      case (g, fs) if fs.iterator.map(_.commitOrdinal).distinct.size > 1 => g
+    }.toSet
+    f => multi.contains(groupOf(f))
   }
 
   /** Could any row of a file with these stats satisfy the filter?

@@ -39,18 +39,21 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
     * identical surface `spark.table("graft_cat.ns.t")` uses. Agg-only
     * custom merge operators (and an explicit bucketMergeRead=false) stay on
     * the library path for the aggregate-merge fallback. */
-  def toDF: DataFrame = {
-    val t = info
-    val routeV2 =
-      !t.properties.get("graft.bucketMergeRead").contains("false") &&
-        (!t.hasPrimaryKey ||
-          t.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
-          GraftRead.bucketMergeSupported(t, schema))
-    if (routeV2)
-      org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
-        new graft.catalog.GraftTableV2(spark, this, tablePath))
+  def toDF: DataFrame =
+    if (readsThroughScan(info)) scanDF
     else toDF(_ => true)
-  }
+
+  /** The routing predicate of [[toDF]] and [[lookupByPk]]: whether a
+    * current-snapshot read goes through the DSv2 scan or the library path. */
+  private def readsThroughScan(t: TableInfo): Boolean =
+    !t.properties.get("graft.bucketMergeRead").contains("false") &&
+      (!t.hasPrimaryKey ||
+        t.properties.get(TableInfo.SkipMergeOnReadProp).contains("true") ||
+        GraftRead.bucketMergeSupported(t, graft.util.SchemaUtil.fromJson(t.schemaJson)))
+
+  private def scanDF: DataFrame =
+    org.apache.spark.sql.graft.StreamShim.dsv2Df(spark,
+      new graft.catalog.GraftTableV2(spark, this, tablePath))
 
   /** Reference accessor parity (LakeSoulTable.scala): `data`/`path` and
     * `as`/`alias` — the aliased handle changes only what `toDF`/`data`
@@ -890,8 +893,7 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       }
       val rangeCols = info.rangeColumns
       if (rangeCols.nonEmpty &&
-        !spark.conf.getOption("spark.graft.allowFullTableUpsert")
-          .exists(_.toBoolean)) {
+        !graft.util.Confs.bool(spark, "spark.graft.allowFullTableUpsert", default = false)) {
         val hasRangeConjunct = all.exists { c =>
           val refs = c.collect { case a: CUA => a.nameParts.head }.toSet
           refs.nonEmpty && refs.forall(r => rangeCols.exists(res(_, r)))
@@ -1811,27 +1813,48 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       .select("__g_desc").collect().map(_.getString(0)).toSet
   }
 
-  /** Primary-key point lookup with bucket pruning (M6): only files of the
-    * bucket `pmod(hash(pkValues), bucketNum)` are read — the same expression
-    * the write path used, so they can never disagree (the reference had to
-    * re-implement Spark murmur3 in Rust for this, spark_murmur3.rs). */
+  /** Primary-key point lookup (M6): a key-equality filter over the
+    * current snapshot. On the DSv2 scan ([[toDF]]'s route) the filter
+    * pushdown hashes the key on the driver
+    * ([[TransactionalWrite.bucketOf]], the write path's own expression),
+    * plans ONE task for the key's bucket and skips every file whose key
+    * bounds exclude the value; the library route (agg-only merge
+    * operators, `graft.bucketMergeRead=false`) narrows its files the same
+    * way. Both prune by bucket only while the snapshot's key->bucket
+    * mapping is settled at the current count
+    * ([[graft.meta.RebucketLog.settledAt]]): mid re-bucket the key may
+    * still sit under the old mapping, so every bucket is read. */
   def lookupByPk(pkValues: Seq[Any]): DataFrame = {
     val t = info
     require(t.hasPrimaryKey, "lookupByPk requires a primary-key table")
     require(pkValues.length == t.hashColumns.length,
       s"expected ${t.hashColumns.length} pk values, got ${pkValues.length}")
-    val sch = schema
-    val lits = t.hashColumns.zip(pkValues).map { case (c, v) =>
-      lit(v).cast(sch(c).dataType)
+    val sch = graft.util.SchemaUtil.fromJson(t.schemaJson)
+    val keys = t.hashColumns.zip(pkValues)
+    val pred = keys.map { case (c, v) =>
+      graft.util.SchemaUtil.qcol(c) === lit(v).cast(sch(c).dataType)
+    }.reduce(_ && _)
+    if (readsThroughScan(t)) return scanDF.filter(pred)
+    // library route: the same narrowing the scan's filter pushdown does,
+    // on the key values in their column types
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val typed = keys.map { case (c, v) =>
+      val dt = sch(c).dataType
+      c -> convertToScala(Cast(Literal(v), dt, tz).eval(), dt)
     }
-    val bucket = spark.range(1)
-      .select(TransactionalWrite.bucketIdExpr(lits, t.bucketNum).as("b"))
-      .head.getInt(0)
-    val files = resolver.currentFiles(tablePath)
-      .filter(f => f.file.bucketId == bucket || f.file.bucketId == -1)
-    val pred = t.hashColumns.zip(lits)
-      .map { case (c, l) => col(c) === l }.reduce(_ && _)
-    GraftRead.read(spark, t, files).filter(pred)
+    val all = resolver.currentFiles(tablePath)
+    val inBucket =
+      if (!RebucketLog.settledAt(t.properties, t.bucketNum, all)) all
+      else {
+        val b = TransactionalWrite.bucketOf(spark, sch, typed, t.bucketNum)
+        all.filter(f => f.file.bucketId == b || f.file.bucketId < 0)
+      }
+    val keyFilters = typed.map { case (c, v) =>
+      org.apache.spark.sql.sources.EqualTo(c, v) }
+    GraftRead.read(spark, t, graft.read.StatsSkipping.prune(t, sch, inBucket, keyFilters))
+      .filter(pred)
   }
 
   /** Maintain a materialized JOIN table against a DIM-side delta (J2,
@@ -2846,9 +2869,9 @@ class GraftTable(val spark: SparkSession, val tablePath: String,
       // behavior, where a typo'd batch column fails the write instead of
       // silently splitting the table.
       val allow = mergeSchemaOverride
-        .orElse(t.properties.get(GraftTable.AutoMergeProp).map(_.toBoolean))
-        .getOrElse(spark.conf.getOption(GraftTable.AutoMergeConf)
-          .forall(_.toBoolean))
+        .orElse(t.properties.get(GraftTable.AutoMergeProp)
+          .map(graft.util.Confs.parseBool(GraftTable.AutoMergeProp, _)))
+        .getOrElse(graft.util.Confs.bool(spark, GraftTable.AutoMergeConf, default = true))
       if (!allow) throw new IllegalArgumentException(
         s"batch adds columns not in the table schema " +
           s"(${added.map(_.name).mkString(", ")}) and schema merging is " +

@@ -221,10 +221,16 @@ object SecondaryIndex {
       case IntegerType => v => v.asInstanceOf[Long].toInt
       case _ => identity
     }
-    val buckets = pks.map(v => TransactionalWrite.bucketOf(
-      spark, schema, Seq(pk -> narrowed(v)), t.bucketNum)).toSet
-    val files = src.liveFiles.filter(f =>
-      f.file.bucketId == -1 || buckets.contains(f.file.bucketId))
+    val live = src.liveFiles
+    // bucket pruning only under the current mapping (mid re-bucket a key
+    // may still sit in its old-mapping bucket), as in GraftTable.lookupByPk
+    val files =
+      if (!graft.meta.RebucketLog.settledAt(t.properties, t.bucketNum, live)) live
+      else {
+        val buckets = pks.map(v => TransactionalWrite.bucketOf(
+          spark, schema, Seq(pk -> narrowed(v)), t.bucketNum)).toSet
+        live.filter(f => f.file.bucketId == -1 || buckets.contains(f.file.bucketId))
+      }
     GraftRead.read(spark, t, files)
       .filter(col(pk).cast("long").isin(pks.toSeq: _*))
   }

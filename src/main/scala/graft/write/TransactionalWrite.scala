@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.meta._
 import graft.mergeop.{MergeOp, MergeOps}
+import graft.util.Confs
 
 /** Transactional bucketed write path (SURVEY.md §2.1 S14; reference:
   * TransactionalWrite.scala:106-285, LakeSoulFileWriter.scala:96-141).
@@ -351,10 +352,10 @@ object TransactionalWrite {
     // CommitOp.Rewrite paths already avoid. Hard invariants still run.
     val ingestion = !internal &&
       (commitOp == CommitOp.Append || commitOp == CommitOp.Merge)
-    val flatPref = spark.conf
-      .getOption("spark.graft.write.flatBucketWrite").forall(_.toBoolean)
-    val skipAqePref = spark.conf
-      .getOption("spark.graft.write.skipAqeWhenInert").forall(_.toBoolean)
+    // every boolean write conf is parsed here, before any file is written
+    val flatPref = Confs.bool(spark, "spark.graft.write.flatBucketWrite", default = true)
+    val skipAqePref = Confs.bool(spark, "spark.graft.write.skipAqeWhenInert", default = true)
+    val planCachePref = Confs.bool(spark, "spark.graft.write.planCache", default = true)
 
     def buildChain(): PreparedChain = {
       val df0 = if (tombstone) dfIn else normalize(table, dfIn, ingestion)
@@ -489,8 +490,7 @@ object TransactionalWrite {
     // are identity-keyed and never equal across batches: caching them is
     // guaranteed misses that pin each batch's RDD lineage until 16 later
     // writes evict it — skip (code-review finding).
-    val cacheable = spark.conf
-      .getOption("spark.graft.write.planCache").forall(_.toBoolean) &&
+    val cacheable = planCachePref &&
       !(ingestion && !tombstone && table.properties.exists { case (k, v) =>
         k.startsWith("graft.expect.") && k.endsWith(".action") && v == "quarantine"
       }) &&

@@ -331,6 +331,26 @@ class DataSourceSuite extends SparkFixture {
         hashColumns = Seq("id"), bucketNum = 8)
       assertRows(t.lookupByPk(Seq(42L)), Seq("[42,v42]"))
       assert(t.lookupByPk(Seq(4242L)).count() == 0)
+      // one job, one task: the key is hashed on the driver and only its
+      // bucket is planned
+      val (jobs, tasks) = jobsAndTasksDuring(t.lookupByPk(Seq(42L)).collect())
+      assert((jobs, tasks) == (1, 1), s"lookup ran $jobs jobs, $tasks tasks")
+    }
+    withTempPath { path =>
+      // four range partitions of contiguous ids: the key's bounds rule out
+      // every file of its bucket outside its own partition
+      val df = (0 until 100).map(i => (i.toLong, i / 25, s"v$i")).toDF("id", "p", "v")
+      val t = GraftTable.create(spark, df, path, rangeColumns = Seq("p"),
+        hashColumns = Seq("id"), bucketNum = 2)
+      val lookup = t.lookupByPk(Seq(42L))
+      assertRows(lookup, Seq("[42,1,v42]"))
+      val scan = lookup.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.getOrElse(fail("no BatchScanExec in the lookup plan"))
+      val skipped = scan.metrics("graftFilesSkipped").value
+      val planned = scan.metrics("graftFilesPlanned").value
+      assert(skipped > 0, s"skipped $skipped files")
+      assert(planned == 1, s"planned $planned files")
     }
   }
 

@@ -48,6 +48,27 @@ class MidMarkerReadSuite extends SparkFixture {
     }
   }
 
+  test("lookupByPk finds every key mid-open-marker, on the scan and library routes") {
+    // the count flipped to 8 but every file still carries the 2-bucket
+    // mapping: a bucket prune by the current count would miss most keys
+    Seq(Map.empty[String, String], Map("graft.bucketMergeRead" -> "false"))
+      .foreach { props =>
+        withTempPath { path =>
+          val t = GraftTable.create(spark,
+            (1 to 32).map(i => (i.toLong, i)).toDF("id", "v"), path,
+            hashColumns = Seq("id"), bucketNum = 2, properties = props)
+          forgeOpenMarker(path, 8)
+          val wrong = (1 to 32).flatMap { k =>
+            val got = t.lookupByPk(Seq(k.toLong)).collect()
+              .map(r => (r.getLong(0), r.getInt(1))).toSeq
+            if (got == Seq((k.toLong, k))) None else Some(k -> got)
+          }
+          assert(wrong.isEmpty, s"$props: ${wrong.size} of 32 lookups wrong: " +
+            wrong.mkString(", "))
+        }
+      }
+  }
+
   test("plain full compaction in the crashed-marker state does not bake duplicates") {
     withTempPath { path =>
       val t = GraftTable.create(spark,

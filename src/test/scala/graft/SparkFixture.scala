@@ -24,6 +24,28 @@ trait SparkFixture extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Spark jobs and tasks started while `body` ran. The listener bus is
+    * drained before counting (LiveListenerBus.waitUntilEmpty is
+    * private[spark], public in bytecode, so it is invoked reflectively). */
+  def jobsAndTasksDuring(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(l)
+    (jobs.get, tasks.get)
+  }
+
   /** Order-insensitive row comparison. */
   def assertSameRows(actual: DataFrame, expected: DataFrame): Unit = {
     val a = actual.collect().map(_.toString).sorted

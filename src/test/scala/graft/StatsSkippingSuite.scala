@@ -230,6 +230,89 @@ class StatsSkippingSuite extends SparkFixture {
     }
   }
 
+  private def plannedFiles(scan: graft.read.GraftScan): Long =
+    scan.reportDriverMetrics().find(_.name == "graftFilesPlanned").get.value
+
+  test("per-group merge safety: a value filter prunes a single-run " +
+    "partition while another partition holds pending deltas") {
+    withTempPath { path =>
+      val df = (1L to 40L).map(i => (i, if (i <= 20) "a" else "b", i.toDouble))
+        .toDF("id", "p", "v")
+      val t = GraftTable.create(spark, df, path, rangeColumns = Seq("p"),
+        hashColumns = Seq("id"), bucketNum = 1)
+      t.upsert(Seq((5L, "a", 500.0)).toDF("id", "p", "v"))
+      val files = t.liveFiles
+      assert(files.count(_.partitionDesc == "p=a") == 2 &&
+        files.count(_.partitionDesc == "p=b") == 1)
+      // p=b's only file has v in [21, 40]; p=a is multi-run, key-only
+      val kept = StatsSkipping.prune(t.info, t.schema, files, Seq(LessThan("v", 10.0)))
+      assert(kept.map(_.partitionDesc) == Seq("p=a", "p=a"), kept.map(_.partitionDesc))
+      graft.catalog.GraftCatalog.register(spark, "default.stats_grp", path)
+      spark.conf.set("spark.sql.catalog.g_stats", "graft.catalog.GraftCatalogV2")
+      val q = spark.sql("SELECT id, v FROM g_stats.default.stats_grp WHERE v < 10")
+      assertRows(q, (1L to 9L).filter(_ != 5L).map(i => s"[$i,${i.toDouble}]"))
+      val scan = q.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.getOrElse(fail("no BatchScanExec in plan"))
+      assert(scan.metrics("graftFilesSkipped").value == 1L)
+    }
+  }
+
+  test("per-group merge safety: value filters never prune a multi-run " +
+    "(partition, bucket); an upsert moving a value out of range cannot " +
+    "resurface the old version") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1L to 80L).map(i => (i, 1.0)).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 4)
+      val bucket = (k: Long) => graft.write.TransactionalWrite.bucketOf(
+        spark, t.schema, Seq("id" -> k), 4)
+      val moved = (1L to 80L).filter(k => bucket(k) < 2)
+      // buckets 0 and 1 become multi-run, buckets 2 and 3 stay single runs
+      t.upsert(moved.map(i => (i, 100.0)).toDF("id", "v"))
+      val files = t.liveFiles
+      val (multi, single) = files.partition(_.file.bucketId < 2)
+      assert(multi.size == 4 && single.size == 2)
+      // v < 50 would rule out the delta files ([100, 100]); dropping one
+      // would resurface v = 1.0 for its moved keys
+      assert(StatsSkipping.prune(t.info, t.schema, files, Seq(LessThan("v", 50.0)))
+        .map(_.file.path).toSet == files.map(_.file.path).toSet)
+      // v > 50 rules out the single runs, never a multi-run group's base run
+      assert(StatsSkipping.prune(t.info, t.schema, files,
+        Seq(GreaterThan("v", 50.0))).map(_.file.path).toSet ==
+        multi.map(_.file.path).toSet)
+      graft.catalog.GraftCatalog.register(spark, "default.stats_moved", path)
+      spark.conf.set("spark.sql.catalog.g_stats", "graft.catalog.GraftCatalogV2")
+      assertRows(spark.sql("SELECT id FROM g_stats.default.stats_moved WHERE v < 50"),
+        (1L to 80L).filterNot(moved.contains).map(i => s"[$i]"))
+      assertRows(spark.sql("SELECT id FROM g_stats.default.stats_moved WHERE v > 50"),
+        moved.map(i => s"[$i]"))
+    }
+  }
+
+  test("runtime filtering after key pruning classifies merge groups from " +
+    "the unpruned snapshot") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        (1L to 50L).map(i => (i, 1.0)).toDF("id", "v"), path,
+        hashColumns = Seq("id"), bucketNum = 1)
+      t.upsert((1L to 10L).map(i => (i, 100.0)).toDF("id", "v"))
+      val builder = new graft.read.GraftScanBuilder(spark, t)
+      builder.pushFilters(Array[Filter](GreaterThan("id", 20L)))
+      val scan = builder.build().asInstanceOf[graft.read.GraftScan]
+      // the key prune drops the delta run ([1, 10]); the base run remains
+      assert(plannedFiles(scan) == 1L)
+      val base = t.liveFiles.filter(f =>
+        FileStats.decode(f.file.stats)("id").mx.contains("50"))
+      // classified from the pruned set alone the group looks single-run ...
+      assert(StatsSkipping.prune(t.info, t.schema, base,
+        Seq(GreaterThan("v", 50.0))).isEmpty)
+      // ... but the scan classifies from its snapshot: still multi-run
+      scan.filter(Array[Filter](GreaterThan("v", 50.0)))
+      assert(plannedFiles(scan) == 1L, "a value filter pruned a multi-run group")
+    }
+  }
+
   test("cluster() sorts a non-PK table; range predicates then skip files") {
     withTempPath { path =>
       // shuffled ids -> every file initially spans the whole id range

@@ -352,4 +352,41 @@ class TableCoreSuite extends SparkFixture {
       assertRows(t.toDF(_ == "r=p2"), Seq("[p2,2,2]"))
     }
   }
+
+  test("a malformed boolean conf fails naming the key and the value, " +
+    "before any file is written") {
+    withTempPath { path =>
+      val t = GraftTable.create(spark,
+        Seq(("a", 1L, 1.0), ("b", 2L, 2.0)).toDF("r", "id", "v"), path,
+        rangeColumns = Seq("r"), hashColumns = Seq("id"), bucketNum = 2)
+      val batch = Seq(("a", 1L, 10.0)).toDF("r", "id", "v")
+      val ops: Seq[(String, () => Unit)] = Seq(
+        "spark.graft.write.flatBucketWrite" -> (() => t.upsert(batch)),
+        "spark.graft.write.skipAqeWhenInert" -> (() => t.upsert(batch)),
+        "spark.graft.write.planCache" -> (() => t.upsert(batch)),
+        "spark.graft.allowFullTableUpsert" -> (() => t.upsert(batch, "v > 0")),
+        GraftTable.AutoMergeConf -> (() => t.upsert(batch.withColumn("extra", lit(1))))
+      )
+      def dataFiles(): Set[String] = {
+        val root = new java.io.File(path)
+        def walk(f: java.io.File): Seq[String] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+          else if (f.getName.endsWith(".parquet")) Seq(f.getPath) else Nil
+        walk(root).toSet
+      }
+      ops.foreach { case (key, op) =>
+        val before = dataFiles()
+        spark.conf.set(key, "yes")
+        val e = try intercept[IllegalArgumentException](op())
+          finally spark.conf.unset(key)
+        assert(e.getMessage.contains(key) && e.getMessage.contains("'yes'"),
+          s"$key: ${e.getMessage}")
+        assert(dataFiles() == before, s"$key: files were written before the failure")
+      }
+      assertRows(t.toDF, Seq("[a,1,1.0]", "[b,2,2.0]"))
+      spark.conf.set("spark.graft.write.planCache", " FALSE ")
+      try t.upsert(batch) finally spark.conf.unset("spark.graft.write.planCache")
+      assertRows(t.toDF, Seq("[a,1,10.0]", "[b,2,2.0]"))
+    }
+  }
 }
